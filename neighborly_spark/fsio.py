@@ -41,6 +41,15 @@ def fs_mkdirs(spark: SparkSession, path: str) -> None:
     fs.mkdirs(hp)
 
 
+def fs_bytes(spark: SparkSession, path: str) -> int:
+    """Total bytes of the files under ``path`` (recursive), 0 when it does
+    not exist — one content-summary call, not a per-file listing."""
+    fs, hp = jfs(spark, path)
+    if not fs.exists(hp):
+        return 0
+    return int(fs.getContentSummary(hp).getLength())
+
+
 def fs_list_names(spark: SparkSession, glob: str) -> list[str]:
     """Names (last path components) matching a glob, [] when the parent
     does not exist — one listing round trip, for sweep-by-listing loops

@@ -96,13 +96,24 @@ def sql_metrics(df) -> dict:
     """SQL metrics of the DataFrame's executed plan (run an action first):
     {node -> {metric -> value}}. The Spark-native observability surface —
     numOutputRows per operator, files/bytes read per scan — read through
-    py4j by a recursive plan walk (descending into the AQE wrapper's
-    current physical plan), no listener registration required."""
+    py4j by a recursive plan walk, no listener registration required.
+    The walk descends into the AQE wrapper's current physical plan and
+    through the leaves AQE leaves in it: every query stage
+    (Shuffle/Broadcast/Result/TableCache QueryStageExec) into the plan it
+    wraps, and a reused exchange into the exchange it reuses — without
+    that, any plan with a shuffle reads as ``{}``."""
     out: dict = {}
 
     def visit(node) -> None:
-        if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
             visit(node.executedPlan())
+            return
+        if kind.endswith("QueryStageExec"):
+            visit(node.plan())
+            return
+        if kind == "ReusedExchangeExec":
+            visit(node.child())
             return
         m = node.metrics()
         keys = m.keys().iterator()

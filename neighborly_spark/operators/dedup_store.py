@@ -89,6 +89,7 @@ from pyspark.sql import functions as F
 
 from neighborly_spark.functions.text import fingerprint
 from neighborly_spark.fsio import (
+    fs_bytes as _fs_bytes,
     fs_exists as _fs_exists,
     fs_delete as _fs_delete,
     fs_list_names as _fs_list_names,
@@ -259,13 +260,35 @@ class DedupStore:
         digest = hashlib.md5(self.path.encode()).hexdigest()[:8]
         return f"dstore_{digest}_{sub}_v{version}"
 
-    def compact(self, n_buckets: int = 32) -> None:
+    def _bucket_count(self, sub: str) -> int:
+        """Buckets for ``sub``'s next base, sized to the data it folds:
+        max(defaultParallelism, ceil(leg_bytes / spark.sql.files.
+        maxPartitionBytes)), where leg_bytes is the on-disk size of the
+        sub-table's current base and delta directories. Each bucket then
+        holds about one scan split, so the gate joins' per-task share of
+        the store stays bounded as it grows, and a small store is not
+        split into more files than the cluster has task slots."""
+        leg_bytes = _fs_bytes(self.spark, f"{self.path}/{sub}")
+        old = (self.compact_info or {}).get("tables", {}).get(sub)
+        if old is not None:
+            leg_bytes += _fs_bytes(self.spark, old["location"])
+        split = int(self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
+        return max(self.spark.sparkContext.defaultParallelism, -(-leg_bytes // split))
+
+    def compact(self, n_buckets: int | None = None) -> None:
         """Fold base + accumulated delta partitions into fresh BUCKETED
         tables clustered AND sorted on the join keys, then drop the delta
         dirs and the previous base. After this, the store side of every
         join (exact anti/semi, banded candidate join) reads pre-bucketed —
         ZERO store-side Exchange (plan-asserted in tests) — and the
-        per-ingest small files are folded into n_buckets files per table.
+        per-ingest small files are folded into one sorted file per bucket.
+
+        Bucket count: ``n_buckets`` when given, else sized per sub-table
+        from its data (see _bucket_count) and recorded in the manifest
+        per table. Each table write shuffles ONCE: the union is
+        hash-partitioned on the bucket keys, and the full-row dedup runs
+        inside those partitions — identical rows share their keys, so the
+        partitioning already satisfies the dedup's distribution.
 
         Crash-safe ordering: new base is written to a NEW versioned
         location, the manifest flips to it, THEN old data is deleted. A
@@ -286,34 +309,33 @@ class DedupStore:
                 # zero band rows) — skip it; a later compact() picks it
                 # up once rows exist. All-empty stores raise below.
                 continue
-            # full-row dedup (round-10 review): a crash between the
-            # manifest flip and the delta delete leaves base and delta
-            # overlapping — without this the overlap would be baked into
-            # every subsequent base forever (reads stay lawful either way
-            # via the read-time min-aggregation, but storage and join rows
-            # should not pay for it indefinitely)
-            full = reduce(lambda a, b: a.unionByName(b), legs).dropDuplicates()
+            n = int(n_buckets) if n_buckets is not None else self._bucket_count(sub)
             name = self._table_name(sub, new_ver)
             loc = f"{self.path}/{sub}_base_v{new_ver}"
             self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-            writer = (
-                # explicit repartition on the bucket keys: without it each
-                # upstream task writes its own file per bucket (tasks x
-                # n_buckets small files — worse than the deltas being
-                # folded); with it, exactly n_buckets files, one sorted
-                # run each (round-10 review)
-                full.repartition(n_buckets, *keys)
+            (
+                # hash-partition on the bucket keys: without it each
+                # upstream task writes its own file per bucket (tasks x n
+                # small files — worse than the deltas being folded); with
+                # it, exactly n files, one sorted run each (round-10
+                # review). The full-row dedup after it folds crash-window
+                # base/delta overlap (round-10 review) without a second
+                # shuffle.
+                reduce(lambda a, b: a.unionByName(b), legs)
+                .repartition(n, *keys)
+                .dropDuplicates()
                 .write.mode("overwrite")
                 .format("parquet")
-                .bucketBy(n_buckets, *keys)
+                .bucketBy(n, *keys)
                 .sortBy(*keys)
                 .option("path", loc)
+                .saveAsTable(name)
             )
-            writer.saveAsTable(name)
             staged[sub] = {
                 "table": name,
                 "location": loc,
                 "keys": list(keys),
+                "n_buckets": n,
                 "schema": ", ".join(
                     f"`{f.name}` {f.dataType.simpleString()}"
                     for f in self.spark.table(name).schema
@@ -321,17 +343,11 @@ class DedupStore:
             }
         if not staged:
             raise ValueError(f"nothing to compact: {self.path} is empty")
-        # a sub skipped this round keeps its previous base (if any)
-        if old:
-            for sub in _COMPACT_KEYS:
-                if sub not in staged and sub in old.get("tables", {}):
-                    staged[sub] = old["tables"][sub]
+        # every sub with a previous base has that base among its legs, so
+        # it was re-staged above: the manifest drops no table, and every
+        # version below new_ver is garbage
         manifest = dict(self.manifest)
-        manifest["compact"] = {
-            "version": new_ver,
-            "n_buckets": int(n_buckets),
-            "tables": staged,
-        }
+        manifest["compact"] = {"version": new_ver, "tables": staged}
         _write_manifest(self.spark, f"{self.path}/{_MANIFEST}", manifest)
         self.manifest = manifest
         for sub in _COMPACT_KEYS:
@@ -340,20 +356,10 @@ class DedupStore:
             # discovered via ONE globStatus listing per sub, not a probe
             # per version number since v1 (round-10 ADVICE: the range
             # sweep issued O(new_ver) catalog + remote-FS round trips per
-            # compact, growing forever) — EXCEPT any directory the
-            # just-flipped manifest still references (round-10 ADVICE,
-            # medium: the carry-forward branch above stages an OLD
-            # version's base for a sub with no new rows; sweeping it
-            # would leave the manifest pointing at a deleted table and
-            # _base() would silently re-register it empty, passing
-            # duplicates as new)
-            kept_dirs = {
-                t["location"].rstrip("/").rsplit("/", 1)[-1]
-                for t in staged.values()
-            }
+            # compact, growing forever)
             for name in _fs_list_names(self.spark, f"{self.path}/{sub}_base_v*"):
                 tail = name.rsplit("_v", 1)[-1]
-                if name in kept_dirs or not tail.isdigit() or int(tail) >= new_ver:
+                if not tail.isdigit() or int(tail) >= new_ver:
                     continue
                 self.spark.sql(
                     f"DROP TABLE IF EXISTS {self._table_name(sub, int(tail))}"
@@ -373,10 +379,13 @@ class DedupStore:
             return None  # sub was empty at every compact() so far
         if not self.spark.catalog.tableExists(t["table"]):
             keys = ", ".join(f"`{k}`" for k in t["keys"])
+            # per-table count; manifests written before it was recorded per
+            # table hold one store-wide count
+            n = t.get("n_buckets", info.get("n_buckets"))
             self.spark.sql(
                 f"CREATE TABLE {t['table']} ({t['schema']}) USING PARQUET "
                 f"CLUSTERED BY ({keys}) SORTED BY ({keys}) "
-                f"INTO {info['n_buckets']} BUCKETS "
+                f"INTO {n} BUCKETS "
                 f"LOCATION '{t['location']}'"
             )
         return self.spark.table(t["table"])

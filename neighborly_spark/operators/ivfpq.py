@@ -47,9 +47,21 @@ CODE_COL = "pq_code"
 _LUT_QUERY_CHUNK = 512
 
 #: code-row tile of the ADC accumulation loop (see _adc_dists): sized so
-#: the (tile, chunk) float64 accumulator (1 MB at 256 x 512) plus the m
-#: 1 MB transposed LUT blocks stay cache-resident per worker
+#: the (tile, chunk) float64 accumulator (1 MB at 256 x 512) stays
+#: cache-resident across the m subspace adds. The loop's working set is
+#: that accumulator plus the m transposed LUT blocks of k' x chunk doubles
+#: (~1 MB each at 256 x 512, so ~m MB: 8 MB at m=8) — beyond a typical
+#: L2, so retune this with _LUT_QUERY_CHUNK and m in mind
 _ADC_ROW_TILE = 256
+
+#: an expansion-form LUT entry ||r||^2 - 2 r.c + ||c||^2 carries an
+#: absolute rounding error of at most ~2 (sub_dim + 2) eps (||r||^2 +
+#: ||c||^2) (the sub_dim-term dot product plus two adds; 2|r.c| <= ||r||^2
+#: + ||c||^2). Entries below _LUT_DIRECT_REL (sub_dim + 2) (||r||^2 +
+#: ||c||^2) — the near-coincident residual/centroid pairs, where that
+#: error is large RELATIVE to the entry — are recomputed in direct form,
+#: so every entry keeps a relative error under ~2e-13
+_LUT_DIRECT_REL = 1e13 * 2.0**-52
 
 
 def _residual_luts(res2d, books, books_sq, m, sub_dim, kp):
@@ -57,17 +69,35 @@ def _residual_luts(res2d, books, books_sq, m, sub_dim, kp):
     the expansion form ||r-c||^2 = r.r - 2 r.c + c.c — one batched einsum
     (BLAS) instead of the broadcast-subtract that materializes an
     (n, m, k', sub_dim) intermediate (round 11: measured ~2.5x per chunk
-    at m=8, k'=256, sub_dim=8). Entries are clamped at 0 (the expansion
-    can round a true 0 to -1e-16, and downstream takes sqrt of LUT sums).
-    This is THE LUT definition for every numpy ADC tier — the list path,
-    the cogroup path, and the snapshot tier all call it, so their
-    distances stay bit-equal by construction (test-gated)."""
+    at m=8, k'=256, sub_dim=8). The expansion cancels catastrophically
+    when a residual nearly equals a centroid (it can even round a true 0
+    below 0, and downstream takes sqrt of LUT sums), so the entries under
+    the _LUT_DIRECT_REL bound — every negative one among them — are
+    recomputed as the direct sum of squared differences, which is never
+    negative. This is THE LUT definition for every numpy ADC tier — the
+    list path, the cogroup path, and the snapshot tier all call it, so
+    their distances stay bit-equal by construction (test-gated)."""
     import numpy as np
 
     r = res2d.reshape(len(res2d), m, sub_dim)
     rsq = np.einsum("nms,nms->nm", r, r)
     cross = np.einsum("nms,mks->nmk", r, books)
-    return np.maximum(rsq[:, :, None] - 2.0 * cross + books_sq[None, :, :], 0.0)
+    # in place, same rounding as rsq - 2 cross + c.c (the x -2 is exact)
+    lut = cross
+    lut *= -2.0
+    lut += rsq[:, :, None]
+    lut += books_sq[None, :, :]
+    # one compare per entry against a per-(row, subspace) bound that uses
+    # the subspace's largest ||c||^2, so it flags a superset of the
+    # entries under the per-entry bound; recomputing extra entries in
+    # direct form only makes them more accurate
+    bound = _LUT_DIRECT_REL * (sub_dim + 2) * (rsq + books_sq.max(axis=1)[None, :])
+    near = lut < bound[:, :, None]
+    if near.any():  # rare: skip the index pass when nothing is flagged
+        i, s, j = np.nonzero(near)
+        d = r[i, s] - books[s, j]
+        lut[i, s, j] = np.einsum("ks,ks->k", d, d)
+    return lut
 
 
 def _adc_dists(ld, idx_s, m):
@@ -101,7 +131,7 @@ def _adc_dists(ld, idx_s, m):
     lt = ld.reshape(len(ld), m, kp).transpose(1, 2, 0)  # (m, k', chunk) views
     blocks = [np.ascontiguousarray(lt[s]) for s in range(m)]
     n = len(idx_s)
-    dist_t = np.empty((n, ld.shape[0]))
+    dist_t = np.empty((n, ld.shape[0]), dtype=ld.dtype)
     for b0 in range(0, n, _ADC_ROW_TILE):
         b1 = min(b0 + _ADC_ROW_TILE, n)
         acc = blocks[0][idx_s[b0:b1, 0]]  # (tile, chunk) contiguous rows

@@ -28,7 +28,13 @@ def formatted(df) -> str:
     return buf.getvalue()
 
 
+USAGE = "usage: python scripts/dump_plans_r12.py {before,after} [sf_dir]"
+
+
 def main() -> None:
+    if len(sys.argv) < 2 or sys.argv[1] not in ("before", "after"):
+        print(USAGE, file=sys.stderr)
+        sys.exit(2)
     suffix = sys.argv[1]
     sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
     out_dir = os.path.join(

@@ -445,3 +445,150 @@ def test_single_base_exact_matches_elides_read_time_aggregation(spark, store):
     mixed = store.exact_matches(batch)
     assert "min(dup_of" in mixed._jdf.queryExecution().optimizedPlan().toString()
     assert {(r.doc_id, r.dup_of) for r in mixed.collect()} == pre_rows
+
+
+def _sql_plan_nodes_since(spark, after_id: int) -> list[list[str]]:
+    """Node names of each SQL execution with id > ``after_id``, read from
+    the session's SQL status store (final AQE plans; works with the UI
+    off). The listener bus is drained first so every execution is in."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    out = []
+    for i in range(execs.size()):
+        eid = execs.apply(i).executionId()
+        if eid <= after_id:
+            continue
+        it = store.planGraph(eid).allNodes().iterator()
+        names = []
+        while it.hasNext():
+            names.append(it.next().name())
+        out.append(names)
+    return out
+
+
+def _last_sql_execution_id(spark) -> int:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return max((execs.apply(i).executionId() for i in range(execs.size())), default=-1)
+
+
+def test_compact_writes_each_table_with_one_exchange(spark, store):
+    """Plan law: the executed plan of every compacted sub-table write —
+    a first compact over delta legs, and a second over base + delta —
+    holds exactly ONE Exchange (the hash partitioning on the bucket keys;
+    the full-row dedup reuses it)."""
+    store.add(_docs(spark, [(1, "alpha beta gamma delta"), (2, "epsilon zeta eta theta")]), "day0")
+    for day, rows in (("day1", [(3, "iota kappa lambda mu")]), ("day2", [(4, "nu xi omicron pi")])):
+        mark = _last_sql_execution_id(spark)
+        store.compact()
+        writes = [
+            nodes for nodes in _sql_plan_nodes_since(spark, mark)
+            if "Execute InsertIntoHadoopFsRelationCommand" in nodes
+        ]
+        assert len(writes) == len(store.compact_info["tables"]) == 2, writes
+        for nodes in writes:
+            assert nodes.count("Exchange") == 1, nodes
+        store.add(_docs(spark, rows), day)
+
+
+def _catalog_buckets(spark, table: str) -> int:
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+    return int(next(r.data_type for r in rows if r.col_name == "Num Buckets"))
+
+
+def test_compact_bucket_count_sizing_rule(spark, store):
+    """The bucket count per sub-table is max(defaultParallelism,
+    ceil(leg_bytes / spark.sql.files.maxPartitionBytes)) over that
+    sub-table's on-disk base + delta bytes, recorded per table in the
+    manifest and in the catalog; an explicit n_buckets wins."""
+    from neighborly_spark.fsio import fs_bytes
+
+    floor = spark.sparkContext.defaultParallelism
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    store.add(docs.filter("doc_id % 2 = 0"), "day0")
+
+    # floor: a small store under the default 128 MB split gets one bucket
+    # per task slot
+    store.compact()
+    tables = store.compact_info["tables"]
+    for sub in ("exact", "minhash"):
+        assert tables[sub]["n_buckets"] == floor
+        assert _catalog_buckets(spark, tables[sub]["table"]) == floor
+
+    # above the floor: ceil(bytes / split) over base + delta
+    store.add(docs.filter("doc_id % 2 = 1"), "day1")
+    leg_bytes = {
+        sub: fs_bytes(spark, f"{store.path}/{sub}") + fs_bytes(spark, tables[sub]["location"])
+        for sub in ("exact", "minhash")
+    }
+    split = min(leg_bytes.values()) // (floor + 3)
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+    try:
+        want = {sub: -(-b // split) for sub, b in leg_bytes.items()}
+        assert all(w > floor for w in want.values()), (want, floor)
+        assert {sub: store._bucket_count(sub) for sub in want} == want
+        store.compact()
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+    tables = store.compact_info["tables"]
+    for sub, w in want.items():
+        assert tables[sub]["n_buckets"] == w
+        assert _catalog_buckets(spark, tables[sub]["table"]) == w
+
+    # an explicit count overrides the rule
+    store.compact(n_buckets=3)
+    tables = store.compact_info["tables"]
+    for sub in ("exact", "minhash"):
+        assert tables[sub]["n_buckets"] == 3
+        assert _catalog_buckets(spark, tables[sub]["table"]) == 3
+
+
+def test_old_format_manifest_reopens(spark, store):
+    """A store compacted before bucket counts were recorded per table holds
+    ONE store-wide ``n_buckets`` in its manifest: it reopens in a fresh
+    catalog, both gates return what they returned before, and the next
+    compact() records its counts per table."""
+    from neighborly_spark.fsio import write_json
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    store.add(docs.filter("doc_id % 3 = 0"), "day0")
+    store.compact(n_buckets=5)
+
+    def gates(s):
+        exact = {(r.doc_id, r.dup_of) for r in s.exact_matches(docs).collect()}
+        near = {
+            (r.doc_id, r.store_doc_id, r.est_jaccard)
+            for r in s.neardup_matches(docs, threshold=0.5).collect()
+        }
+        return exact, near
+
+    before = gates(store)
+    assert before[0] and before[1]
+    old = dict(store.manifest)
+    info = old["compact"]
+    old["compact"] = {
+        "version": info["version"],
+        "n_buckets": 5,
+        "tables": {
+            sub: {k: v for k, v in t.items() if k != "n_buckets"}
+            for sub, t in info["tables"].items()
+        },
+    }
+    write_json(spark, f"{store.path}/manifest.json", old)
+    for t in info["tables"].values():
+        spark.sql(f"DROP TABLE IF EXISTS {t['table']}")  # external: data stays
+
+    reopened = DedupStore.open(spark, store.path)
+    assert gates(reopened) == before
+    for t in info["tables"].values():
+        assert _catalog_buckets(spark, t["table"]) == 5
+
+    # the next compact writes the per-table form
+    reopened.add(_docs(spark, [(990001, "a brand new post reopen text")]), "day1")
+    reopened.compact(n_buckets=4)
+    assert "n_buckets" not in reopened.compact_info
+    for t in reopened.compact_info["tables"].values():
+        assert t["n_buckets"] == 4
+        assert _catalog_buckets(spark, t["table"]) == 4

@@ -82,3 +82,19 @@ def test_worker_cache_stats_sees_snapshot_traffic(spark, tmp_path):
     ).collect()
     rows = worker_cache_stats(spark, probes_per_core=4)
     assert any(r["entries"] > 0 and r["bytes"] > 0 for r in rows)
+
+
+def test_sql_metrics_descends_through_aqe_query_stages(spark):
+    """Under AQE a shuffling plan's final form is rooted in query-stage
+    leaves (ResultQueryStage / ShuffleQueryStage); the walk must descend
+    through them, so the Exchange and the HashAggregates report."""
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    df = emb.groupBy((F.col("vec_id") % 7).alias("g")).agg(F.count("*").alias("n"))
+    assert len(df.collect()) == 7
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "QueryStage" in plan, plan  # the shape this law is about
+    metrics = sql_metrics(df)
+    assert "Exchange" in metrics and metrics["Exchange"], metrics
+    assert int(metrics["Exchange"]["shuffleRecordsWritten"]) > 0
+    assert "HashAggregate" in metrics, metrics
+    assert int(metrics["HashAggregate"]["numOutputRows"]) > 0
